@@ -86,6 +86,7 @@ import shutil
 import struct
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -191,6 +192,34 @@ def _rel_expr():
     return F.concat_ws("/", F.element_at(parts, -2), F.element_at(parts, -1))
 
 
+# The deletion-vector file layout `delete_keys_mor` writes.
+_DV_SCHEMA = "rel string, pos long"
+
+
+def _scan(
+    spark: SparkSession, path: str, rels, schema: StructType | str
+) -> DataFrame:
+    """Parquet scan of ``rels`` (relpaths under ``path``) typed by
+    ``schema`` — never inferred from footers, so building the scan
+    launches no Spark job. Columns a file predates (written before a
+    schema evolution) read as NULL of the schema's type; every file
+    the engine writes carries the log's types (`_conform`), so no
+    column ever needs a cross-type merge."""
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(path, rel) for rel in rels]
+    )
+
+
+def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` projected onto ``schema``: schema column order, each
+    column cast to the schema's type. The cast is ANSI, so a value the
+    table type cannot hold raises instead of wrapping — a staged file
+    must never disagree with the log on a column's type."""
+    return df.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def _apply_dv(
     spark: SparkSession,
     path: str,
@@ -216,9 +245,7 @@ def _apply_dv(
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
     if dv_dirs:
-        pos = spark.read.parquet(
-            *[os.path.join(path, d) for d in sorted(dv_dirs)]
-        ).select(
+        pos = _scan(spark, path, sorted(dv_dirs), _DV_SCHEMA).select(
             F.col("rel").alias("_dv_rel"), F.col("pos").alias("_dv_pos")
         )
         tagged = tagged.join(pos, ["_dv_rel", "_dv_pos"], "left_anti")
@@ -366,7 +393,7 @@ def _write_data_files(
                 ).alias(f"bp_{s}")
             )
     stats = (
-        spark.read.parquet(full)
+        _scan(spark, path, [sub], df.schema)
         .groupBy(F.input_file_name().alias("f"))
         .agg(*aggs)
         .collect()
@@ -509,21 +536,27 @@ def _write_partitioned(
     return added
 
 
-def _current_schema(path: str, version: int | None = None) -> tuple[StructType, bool]:
-    """The table schema AS OF ``version`` (default latest) and whether
-    it ever EVOLVED on the way there: the last commit ≤ version that
-    recorded a "schema" wins (commit 0 always records one; an
-    evolving merge records the widened one — r11 schema evolution).
-    Metadata-sized log replay, same cost as snapshot resolution."""
-    v = latest_version(path) if version is None else version
-    schema_json, evolved = None, False
-    for i in range(v + 1):
+def _schema_history(path: str, version: int) -> list[StructType]:
+    """The table schema as of every version 0..``version``, from ONE
+    forward log replay: the last commit ≤ v that recorded a "schema"
+    wins (commit 0 always records one; an evolving merge records the
+    widened one — r11 schema evolution). Metadata-sized driver work."""
+    out: list[StructType] = []
+    schema_json = None
+    for i in range(version + 1):
         c = _read_commit(path, i)
-        if c.get("schema"):
-            if schema_json is not None:
-                evolved = True
+        if c.get("schema") and c["schema"] != schema_json:
             schema_json = c["schema"]
-    return StructType.fromJson(json.loads(schema_json)), evolved
+            schema = StructType.fromJson(json.loads(schema_json))
+        out.append(schema)
+    return out
+
+
+def _current_schema(path: str, version: int | None = None) -> StructType:
+    """The table schema AS OF ``version`` (default latest) — the type
+    every scan of that version reads its files with."""
+    v = latest_version(path) if version is None else version
+    return _schema_history(path, v)[-1]
 
 
 def read_snapshot(
@@ -537,40 +570,23 @@ def read_snapshot(
     error (ADVICE r10: previously FileNotFoundError, which made an
     emptied table permanently unreadable and un-insertable).
 
-    Schema evolution (r11): the schema AS OF the requested version is
-    the last one any commit ≤ version recorded; when the history
-    evolved, files written before the widening lack the new columns,
-    so the scan reads with ``mergeSchema`` and backfills any column a
-    file predates as NULL — the same read contract Delta/Iceberg give
-    an evolved table. Un-evolved tables keep the single-footer fast
-    path (no mergeSchema cost).
+    The scan is typed by the schema AS OF the requested version (the
+    last one any commit ≤ version recorded), never inferred from
+    parquet footers: building the frame launches no Spark job, and a
+    file written before a schema evolution reads the columns it
+    predates as NULL — the same read contract Delta/Iceberg give an
+    evolved table.
 
     Deletion vectors (r11 §20.2): rows MOR-deleted as of the
     requested version are filtered by one position anti-join
     (`_apply_dv`); a DV-free table skips the join entirely."""
     live = snapshot_files(path, version)
-    schema, evolved = _current_schema(path, version)
-    cols = [f.name for f in schema.fields]
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
-    paths = [os.path.join(path, rel) for rel in live]
     dvm = snapshot_dv(path, version)
     dv_dirs = {d for dirs in dvm.values() for d in dirs}
-    if not evolved:
-        return _apply_dv(spark, path, spark.read.parquet(*paths), dv_dirs)
-    df = _apply_dv(
-        spark,
-        path,
-        spark.read.option("mergeSchema", "true").parquet(*paths),
-        dv_dirs,
-    )
-    return df.select(
-        *[
-            F.col(c) if c in df.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
-    )
+    return _apply_dv(spark, path, _scan(spark, path, live, schema), dv_dirs)
 
 
 def read_keys(
@@ -591,15 +607,15 @@ def read_keys(
     change the answer, only the bytes read). Returns the matching
     rows as of ``version`` (default latest).
 
-    Cost shape: O(distinct keys × file manifest) driver/broadcast
-    probe + a scan of O(true files holding the keys) — for a
+    Cost shape: one probe query of O(keys × live files) broadcast
+    nested-loop tests + a scan of O(true files holding the keys) — for a
     bloom-enabled hash-keyed table that is O(batch) files, the same
     bound the write side gets. This is Delta/Iceberg data skipping
     applied to reads, not just merges."""
     meta = table_meta(path)
     keys = meta["key"]
     live = snapshot_files(path, version)
-    schema, _ = _current_schema(path, version)
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
     touched = _touched_files(
@@ -611,21 +627,11 @@ def read_keys(
     scan = _apply_dv(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in touched]
-        ),
+        _scan(spark, path, touched, schema),
         {d for rel in touched for d in dvm.get(rel, [])},
     )
-    cols = [f.name for f in schema.fields]
-    scan = scan.select(
-        *[
-            F.col(c) if c in scan.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
-    )
     return scan.join(
-        F.broadcast(keys_df.select(*keys).distinct()), keys, "leftsemi"
+        F.broadcast(keys_df.select(*keys)), keys, "leftsemi"
     )
 
 
@@ -648,7 +654,7 @@ def read_where_range(
     file-level skipping a parquet row-group statistic cannot do
     (listing and footer I/O already happened by then)."""
     live = snapshot_files(path, version)
-    schema, _ = _current_schema(path, version)
+    schema = _current_schema(path, version)
     if not live:
         return spark.createDataFrame([], schema)
     jlo, jhi = _json_stat(lo), _json_stat(hi)
@@ -663,18 +669,8 @@ def read_where_range(
     scan = _apply_dv(
         spark,
         path,
-        spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in keep]
-        ),
+        _scan(spark, path, keep, schema),
         {d for rel in keep for d in dvm.get(rel, [])},
-    )
-    cols = [f.name for f in schema.fields]
-    scan = scan.select(
-        *[
-            F.col(c) if c in scan.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in cols
-        ]
     )
     return scan.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
@@ -716,13 +712,14 @@ def read_changes(
     keys = meta["key"]
     last = latest_version(path) if v_to is None else v_to
     horizon = vacuum_horizon(path)
+    schemas = _schema_history(path, last)
     frames: list[DataFrame] = []
     for v in range(v_from, last + 1):
         c = _read_commit(path, v)
         op = c.get("op")
         if op in ("vacuum", "compact"):
             continue  # layout/retention commits: zero logical changes
-        schema, _ = _current_schema(path, v)
+        schema = schemas[v]
         cols = [f.name for f in schema.fields]
         payload = [x for x in cols if x not in keys]
         added = sorted(c.get("added", {}))
@@ -746,47 +743,25 @@ def read_changes(
             # data files against that one DV dir — O(commit), like
             # every other feed branch
             dvinfo = c["dv"]
-            scan = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, r) for r in dvinfo["files"]]
-            )
-            tagged = scan.select(
+            tagged = _scan(spark, path, dvinfo["files"], schema).select(
                 "*",
                 _rel_expr().alias("_dv_rel"),
                 F.col("_metadata.row_index").alias("_dv_pos"),
             )
-            pos = spark.read.parquet(
-                os.path.join(path, dvinfo["dir"])
-            ).select(
+            pos = _scan(spark, path, [dvinfo["dir"]], _DV_SCHEMA).select(
                 F.col("rel").alias("_dv_rel"),
                 F.col("pos").alias("_dv_pos"),
             )
             dead = tagged.join(pos, ["_dv_rel", "_dv_pos"], "leftsemi")
             frames.append(
-                dead.select(
-                    *[
-                        F.col(x) if x in scan.columns
-                        else F.lit(None).cast(schema[x].dataType).alias(x)
-                        for x in cols
-                    ],
-                    F.lit("delete").alias("_change_type"),
-                    ver,
-                )
+                dead.select(*cols, F.lit("delete").alias("_change_type"), ver)
             )
             continue
 
         def _read(rels: list[str]) -> DataFrame:
             if not rels:
                 return spark.createDataFrame([], schema)
-            df = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(path, rel) for rel in rels]
-            )
-            return df.select(
-                *[
-                    F.col(x) if x in df.columns
-                    else F.lit(None).cast(schema[x].dataType).alias(x)
-                    for x in cols
-                ]
-            )
+            return _scan(spark, path, rels, schema)
 
         ver = F.lit(v).cast("long").alias("_commit_version")
         post = _read(added)
@@ -868,7 +843,7 @@ def read_changes(
                 ver,
             ).select(*cols, "_change_type", "_commit_version")
         )
-    schema, _ = _current_schema(path, last)
+    schema = schemas[last]
     if not frames:
         empty = spark.createDataFrame([], schema)
         return empty.select(
@@ -895,77 +870,80 @@ def _touched_files(
     path: str | None = None,
     bloom: dict | None = None,
 ) -> list[str]:
-    """Files whose per-column [min, max] ranges ALL hold at least one
-    change key — the conservative zone-map conjunction (a file can
-    contain key k only if every component k_i lies inside that file's
-    [lo_i, hi_i]; parquet row-group pruning runs the same test).
-    Computed as one broadcast range-join of the (metadata-sized) file
-    list against the distinct change keys — never collecting the
-    change set. Typed from the manifest's recorded key types (r11 —
-    string/date/composite keys; previously hardcoded long).
+    """Files that may hold at least one change key, from ONE Spark
+    query. A key survives against a file iff every component k_i lies
+    inside that file's [lo_i, hi_i] (the conservative zone-map
+    conjunction parquet row-group pruning runs) AND, when the file
+    carries a bloom sidecar, the key hits all k of its bloom bits.
+    Both tests hold for the SAME key, so a file whose range holds one
+    key while its bloom bits are set by another is pruned.
 
-    With a table ``bloom`` config (r11 §20.2), range survivors that
-    carry a bloom sidecar get a second, MEMBERSHIP probe: the
-    candidate files' bitsets (loaded driver-side — O(range survivors
-    × m/8 bytes), never O(live files)) broadcast-join the distinct
-    change keys on the k-fold bit test; a file survives only if some
-    key hits all k bits. For hash-distributed keys — where every
-    range spans the whole domain and phase 1 prunes nothing — this is
-    what keeps a sparse merge O(true touched files). Files without a
-    sidecar (pre-bloom history) stay conservatively touched."""
+    The per-file stats (typed from the manifest's recorded key types
+    — string/date/composite keys since r11) and bitsets become one
+    Arrow-built local relation, planned as a driver-side
+    `LocalTableScan` and broadcast against the change keys in a
+    nested-loop join; only the matching relpaths come back, so the
+    change set is never collected and never deduplicated. Driver
+    work is O(live files × m/8) sidecar bytes. Without a table
+    ``bloom`` config (or ``path``) the bitsets are skipped and the
+    probe is range-only; files without a sidecar (pre-bloom history)
+    pass the bloom test conservatively. A bloom false positive only
+    costs one needless file read, never a wrong result."""
+    if not live:
+        return []
+    rels = sorted(live)
+    cols: dict = {"rel": rels}
     fields = ["rel string"]
-    for i, t in enumerate(key_types):
-        fields += [f"lo_{i} {t}", f"hi_{i} {t}"]
-    rows = []
-    for rel, s in live.items():
-        row: list = [rel]
-        for i, t in enumerate(key_types):
-            row += [_py_stat(s["lo"][i], t), _py_stat(s["hi"][i], t)]
-        rows.append(tuple(row))
-    stats = spark.createDataFrame(rows, ", ".join(fields))
     cond = None
-    for i, k in enumerate(keys):
+    for i, t in enumerate(key_types):
+        cols[f"lo_{i}"] = [_py_stat(live[r]["lo"][i], t) for r in rels]
+        cols[f"hi_{i}"] = [_py_stat(live[r]["hi"][i], t) for r in rels]
+        fields += [f"lo_{i} {t}", f"hi_{i} {t}"]
         c = (F.col(f"k_{i}") >= F.col(f"lo_{i}")) & (
             F.col(f"k_{i}") <= F.col(f"hi_{i}")
         )
         cond = c if cond is None else (cond & c)
-    dkeys = changes.select(
-        *[F.col(k).alias(f"k_{i}") for i, k in enumerate(keys)]
-    ).distinct()
-    hit = dkeys.join(F.broadcast(stats), cond).select("rel").distinct().collect()
-    candidates = [r["rel"] for r in hit]
-    if not bloom or path is None or not candidates:
-        return candidates
-    testable = [rel for rel in candidates if live[rel].get("bloom")]
-    if not testable:
-        return candidates
-    m, k_hashes = bloom["m"], bloom["k"]
-    brows = []
-    for rel in testable:
-        with open(os.path.join(path, rel + ".bloom"), "rb") as fh:
-            raw = fh.read()
-        words = struct.unpack(f"<{len(raw) // 8}Q", raw)
-        brows.append((rel, [w - (1 << 64) if w >= 1 << 63 else w for w in words]))
-    bits = spark.createDataFrame(brows, "rel string, bits array<long>")
-    probe = dkeys.select(
-        _bloom_key_expr([f"k_{i}" for i in range(len(keys))]).alias("_bk")
+    # keys in the table's own types, so both tests (and the bloom
+    # hash) see exactly what the write side saw; a key the type cannot
+    # hold cannot be in the table and probes as NULL
+    probe = changes.select(
+        *[
+            F.col(k).try_cast(t).alias(f"k_{i}")
+            for i, (k, t) in enumerate(zip(keys, key_types))
+        ]
     )
-    member = None
-    for s in range(k_hashes):
-        t = F.expr(
-            f"(bits[CAST(pmod(xxhash64(_bk, {s}), {m}) / 64 AS INT)] & "
-            f"shiftleft(CAST(1 AS BIGINT), "
-            f"CAST(pmod(xxhash64(_bk, {s}), {m}) % 64 AS INT))) != 0"
+    if bloom and path is not None:
+        m, k_hashes = bloom["m"], bloom["k"]
+        cols["bits"] = [
+            _read_bits(path, r) if live[r].get("bloom") else None for r in rels
+        ]
+        fields.append("bits array<long>")
+        bk = _bloom_key_expr([f"k_{i}" for i in range(len(keys))])
+        probe = probe.select(
+            "*",
+            *[
+                F.pmod(F.xxhash64(bk, F.lit(s)), F.lit(m)).alias(f"_b{s}")
+                for s in range(k_hashes)
+            ],
         )
-        member = t if member is None else (member & t)
-    surviving = {
-        r["rel"]
-        for r in probe.join(F.broadcast(bits), member)
-        .select("rel")
-        .distinct()
-        .collect()
-    }
-    return [rel for rel in candidates if rel not in set(testable) - surviving]
+        member = F.expr(
+            " AND ".join(
+                f"(bits[CAST(_b{s} div 64 AS INT)] & "
+                f"shiftleft(1L, CAST(_b{s} % 64 AS INT))) != 0"
+                for s in range(k_hashes)
+            )
+        )
+        cond = cond & (F.col("bits").isNull() | member)
+    stats = spark.createDataFrame(pa.table(cols), ", ".join(fields))
+    hit = probe.join(F.broadcast(stats), cond).select("rel").distinct()
+    return sorted(r["rel"] for r in hit.collect())
+
+
+def _read_bits(path: str, rel: str) -> list[int]:
+    """A file's bloom sidecar as signed 64-bit words (Spark's long)."""
+    with open(os.path.join(path, rel + ".bloom"), "rb") as fh:
+        raw = fh.read()
+    return list(struct.unpack(f"<{len(raw) // 8}q", raw))
 
 
 def _intervening_commits_disjoint(
@@ -1031,16 +1009,20 @@ def merge_into(
 
     Schema evolution (r11): with ``evolve_schema=True`` a change set
     carrying payload columns the table lacks WIDENS the table — the
-    base files this merge reads get the new columns backfilled as
-    NULL before the resolve, and the commit records the widened
-    schema, which `read_snapshot` / `read_changes` honor per version.
-    Untouched files are still carried verbatim (old footers; the
-    evolved read path backfills them at scan time — rewriting 100 TB
-    to add a column is exactly what evolution exists to avoid).
-    Without the flag an extra column is a loud error, never a silent
-    drop. An evolving change set must still carry every EXISTING
-    payload column — evolution adds columns, it does not make the
-    CDC contract partial."""
+    base files this merge reads are scanned with the widened schema
+    (so they read the new columns as NULL), and the commit records
+    the widened schema, which `read_snapshot` / `read_changes` honor
+    per version. Untouched files are still carried verbatim (old
+    footers; the typed scan reads their missing columns as NULL —
+    rewriting 100 TB to add a column is exactly what evolution exists
+    to avoid). Without the flag an extra column is a loud error, never
+    a silent drop. An evolving change set must still carry every
+    EXISTING payload column — evolution adds columns, it does not
+    make the CDC contract partial.
+
+    The merged rows are cast to the table's types before staging
+    (ANSI: a value the column type cannot hold raises), so every file
+    the merge writes carries the log's types."""
 
     def _log(event: str, v: int) -> None:
         if attempt_log is not None:
@@ -1049,7 +1031,7 @@ def merge_into(
     meta = table_meta(path)
     keys = _key_cols(key) if key is not None else meta["key"]
     key_types = meta["key_types"]
-    schema, _ = _current_schema(path)
+    schema = _current_schema(path)
     table_cols = [f.name for f in schema.fields]
     by_name = {f.name: f for f in changes.schema.fields}
     new_cols = [
@@ -1076,29 +1058,22 @@ def merge_into(
             # merge rewrites — a copy-on-write rewrite must not
             # resurrect MOR-deleted rows (the rewrite then CLEARS the
             # DV: the file leaves the live set, snapshot_dv drops it)
+            # (typed by the possibly just-widened schema: columns the
+            # read files predate come back NULL)
             dvm = snapshot_dv(path, v)
             base = _apply_dv(
                 spark,
                 path,
-                spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(path, rel) for rel in touched]
-                ),
+                _scan(spark, path, touched, schema),
                 {d for rel in touched for d in dvm.get(rel, [])},
             )
         else:
             # pure insert outside every range: merge against an empty
             # base with the table's (possibly just-widened) schema
             base = spark.createDataFrame([], schema)
-        # backfill any column the read files predate (new this merge,
-        # or evolved by an earlier one) as typed NULL
-        base = base.select(
-            *[
-                F.col(f.name) if f.name in base.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
+        merged = _conform(
+            merge_apply(base, changes, key=keys, op_col=op_col), schema
         )
-        merged = merge_apply(base, changes, key=keys, op_col=op_col)
         staged = _write_data_files(
             spark,
             path,
@@ -1184,6 +1159,11 @@ def append_table(
     sidecars (written here too, when the table is bloom-enabled)
     exist to restore to O(true files).
 
+    ``df`` must carry exactly the table's columns, in any order; they
+    are cast to the table's types before staging (ANSI: a value the
+    column type cannot hold raises), so the staged files always carry
+    the log's types and typed scans never meet a mismatched file.
+
     A blind append never logically conflicts with anything — on a
     version race it re-claims the next head with the SAME staged
     files (no re-plan, no re-write).
@@ -1201,7 +1181,7 @@ def append_table(
     if (txn_app is None) != (txn_version is None):
         raise ValueError("txn_app and txn_version must be set together")
     meta = table_meta(path)
-    schema, _ = _current_schema(path)
+    schema = _current_schema(path)
     want = [f.name for f in schema.fields]
     if sorted(df.columns) != sorted(want):
         raise ValueError(
@@ -1212,7 +1192,7 @@ def append_table(
     staged = _write_data_files(
         spark,
         path,
-        df.select(*want).repartitionByRange(max(n_files, 1), *meta["key"]),
+        _conform(df, schema).repartitionByRange(max(n_files, 1), *meta["key"]),
         meta["key"],
         meta.get("bloom"),
     )
@@ -1283,13 +1263,10 @@ def delete_keys_mor(
         if not touched:
             return v
         dvm = snapshot_dv(path, v)
-        scan = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, rel) for rel in touched]
-        )
         base = _apply_dv(
             spark,
             path,
-            scan,
+            _scan(spark, path, touched, _current_schema(path, v)),
             {d for r in touched for d in dvm.get(r, [])},
             keep_tags=True,
         ).select(
@@ -1298,12 +1275,12 @@ def delete_keys_mor(
             F.col("_dv_pos").alias("pos"),
         )
         hits = base.join(
-            del_keys.select(*keys).distinct(), keys, "leftsemi"
+            del_keys.select(*keys), keys, "leftsemi"
         ).select("rel", "pos")
         sub = f"dv-{uuid.uuid4().hex[:12]}"
         hits.write.parquet(os.path.join(path, sub))
         per_file = (
-            spark.read.parquet(os.path.join(path, sub))
+            _scan(spark, path, [sub], _DV_SCHEMA)
             .groupBy("rel")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()

@@ -1517,3 +1517,262 @@ def test_streaming_foreachbatch_append_sink_exactly_once(spark, tmp_path):
         txn_version=1,
     )
     assert _rows(read_snapshot(spark, path)) == want
+
+
+def test_type_mismatched_append_keeps_pruned_reads_working(spark, tmp_path):
+    """An append whose payload is `int` into a `bigint` table is cast
+    to the log's types before staging: the pruned reads, a later
+    merge and the change feed all read it back with the table's
+    types. A value the table type cannot hold raises instead of
+    wrapping."""
+    from apache_spark_irs_form_990_spark.sources.lakehouse import (
+        append_table,
+        read_changes,
+        read_keys,
+        read_where_range,
+    )
+
+    path = str(tmp_path / "t")
+    create_table(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 20)],
+            "n_nationkey int, n_name string, n_regionkey bigint",
+        ),
+        key="n_nationkey",
+        n_files=1,
+    )
+    v1 = append_table(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(3, "c", 30), (4, "d", 40)],
+            "n_nationkey int, n_name string, n_regionkey int",
+        ),
+    )
+    lookup = read_keys(
+        spark, path, spark.createDataFrame([(2,), (3,)], "n_nationkey int")
+    )
+    assert dict(lookup.dtypes)["n_regionkey"] == "bigint"
+    assert _rows(lookup) == {(2, "b", 20), (3, "c", 30)}
+    rng = read_where_range(spark, path, "n_nationkey", 2, 4)
+    assert _rows(rng) == {(2, "b", 20), (3, "c", 30), (4, "d", 40)}
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(3, "U", "c2", 31), (1, "D", None, None)],
+            "n_nationkey int, op string, n_name string, n_regionkey int",
+        ),
+    )
+    assert _rows(read_snapshot(spark, path)) == {
+        (2, "b", 20), (3, "c2", 31), (4, "d", 40),
+    }
+    feed = read_changes(spark, path, v_from=v1)
+    assert {
+        (r["n_nationkey"], r["n_regionkey"], r["_change_type"])
+        for r in feed.collect()
+    } == {
+        (3, 30, "insert"), (4, 40, "insert"),
+        (3, 30, "update_preimage"), (3, 31, "update_postimage"),
+        (1, 10, "delete"),
+    }
+    # a narrower table type refuses a value it cannot hold
+    narrow = str(tmp_path / "n")
+    create_table(
+        spark,
+        narrow,
+        spark.createDataFrame([(1, 5)], "k int, v int"),
+        key="k",
+        n_files=1,
+    )
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        append_table(
+            spark, narrow, spark.createDataFrame([(2, 1 << 40)], "k int, v bigint")
+        )
+    assert latest_version(narrow) == 0
+
+
+def test_fused_probe_prunes_per_key(spark, tmp_path):
+    """The range and bloom tests hold for the SAME key: with a 64-bit,
+    1-hash bloom, a file whose range holds key A while only key B
+    (outside the range) sets its bloom bits is not touched — the
+    two-phase probe (some key in range, some key in the bloom) kept
+    it. A merge of {A, B} still lands exactly as a replay says."""
+    from apache_spark_irs_form_990_spark.sources.lakehouse import (
+        _bloom_key_expr,
+        _read_commit,
+        _touched_files,
+        append_table,
+        table_meta,
+    )
+
+    path = str(tmp_path / "t")
+    bit = F.pmod(F.xxhash64(_bloom_key_expr(["k"]), F.lit(0)), F.lit(64))
+    bits = {
+        r["k"]: r["b"]
+        for r in spark.range(0, 200).select(
+            F.col("id").alias("k"), bit.alias("b")
+        ).collect()
+    }
+    file1 = list(range(0, 101, 10))  # range [0, 100]
+    set1 = {bits[k] for k in file1}
+    a = next(k for k in range(1, 100) if k not in file1 and bits[k] not in set1)
+    b = next(k for k in range(101, 200) if bits[k] in set1)
+    schema = "k long, v string"
+    create_table(
+        spark,
+        path,
+        spark.createDataFrame([(k, f"f1_{k}") for k in file1], schema),
+        key="k",
+        n_files=1,
+        bloom_m_bits=64,
+        bloom_k=1,
+    )
+    file2 = [300, 350, 400]
+    append_table(
+        spark, path, spark.createDataFrame([(k, f"f2_{k}") for k in file2], schema)
+    )
+    meta = table_meta(path)
+    live = snapshot_files(path)
+    f1 = next(rel for rel, s in live.items() if s["lo"] == [0])
+    f2 = next(rel for rel, s in live.items() if s["lo"] == [300])
+    keys = spark.createDataFrame([(a,), (b,)], "k long")
+    assert f1 in _touched_files(
+        spark, live, keys, meta["key"], meta["key_types"]
+    ), "range-only probe must keep the file (A is inside its range)"
+    assert _touched_files(
+        spark, live, keys, meta["key"], meta["key_types"], path, meta["bloom"]
+    ) == []
+    changes = [(a, "I", "new_a"), (b, "I", "new_b"), (350, "U", "upd")]
+    v = merge_into(
+        spark,
+        path,
+        spark.createDataFrame(changes, "k long, op string, v string"),
+    )
+    assert _read_commit(path, v)["removed"] == [f2]
+    want = {k: f"f1_{k}" for k in file1} | {k: f"f2_{k}" for k in file2}
+    want.update({k: val for k, _, val in changes})
+    got = {r["k"]: r["v"] for r in read_snapshot(spark, path).collect()}
+    assert got == want
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_typed_scans_and_fused_probe(spark, tmp_path):
+    """Readers are typed from the log, so BUILDING a snapshot, range
+    or change-feed frame launches no Spark job; the touched-file probe
+    on a bloom table is one query of at most 3 jobs (broadcast of the
+    local stats relation, the rel-distinct shuffle, the result)."""
+    from apache_spark_irs_form_990_spark.sources.lakehouse import (
+        _touched_files,
+        append_table,
+        delete_keys_mor,
+        read_changes,
+        read_where_range,
+        table_meta,
+    )
+
+    path = str(tmp_path / "t")
+    h = _hashed_nation(spark)
+    cohort = F.crc32(F.col("k")) % 3
+    create_table(
+        spark, path, h.filter(cohort == 0), key="k", n_files=1,
+        bloom_m_bits=1 << 12,
+    )
+    for i in (1, 2):
+        append_table(spark, path, h.filter(cohort == i), n_files=1)
+    k_of = {r["n_name"]: r["k"] for r in h.select("k", "n_name").collect()}
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(k_of["NATION_4"], "U", "X", 1)],
+            "k string, op string, n_name string, n_regionkey long",
+        ),
+    )
+    delete_keys_mor(
+        spark, path, spark.createDataFrame([(k_of["NATION_9"],)], "k string")
+    )
+    assert _jobs_launched(spark, lambda: read_snapshot(spark, path)) == 0
+    assert _jobs_launched(
+        spark, lambda: read_where_range(spark, path, "n_regionkey", 0, 2)
+    ) == 0
+    assert _jobs_launched(spark, lambda: read_changes(spark, path, 1)) == 0
+    meta = table_meta(path)
+    live = snapshot_files(path)
+    probe = spark.createDataFrame(
+        [(k_of["NATION_2"],), (k_of["NATION_5"],), ("ghost",)], "k string"
+    )
+    got: list = []
+    n = _jobs_launched(
+        spark,
+        lambda: got.extend(
+            _touched_files(
+                spark, live, probe, meta["key"], meta["key_types"], path,
+                meta["bloom"],
+            )
+        ),
+    )
+    assert 1 <= n <= 3, f"probe launched {n} jobs"
+    assert 1 <= len(got) <= 2
+
+
+def test_pruned_reads_on_schema_evolved_table(spark, tmp_path):
+    """read_keys and read_where_range over an evolved table: a file
+    written before the widening returns the new column as a typed
+    NULL, a rewritten file returns its value, and a read pinned below
+    the evolution keeps the narrow schema."""
+    from apache_spark_irs_form_990_spark.sources.lakehouse import (
+        read_keys,
+        read_where_range,
+    )
+
+    path = str(tmp_path / "t")
+    create_table(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(1, "a", 0), (20, "b", 0)],
+            "n_nationkey int, n_name string, n_regionkey long",
+        ),
+        key="n_nationkey",
+        n_files=2,
+    )
+    merge_into(
+        spark,
+        path,
+        spark.createDataFrame(
+            [(1, "U", "a2", 5, 7)],
+            "n_nationkey int, op string, n_name string, n_regionkey long, "
+            "extra bigint",
+        ),
+        evolve_schema=True,
+    )
+    keys = spark.createDataFrame([(1,), (20,)], "n_nationkey int")
+    for df in (
+        read_keys(spark, path, keys),
+        read_where_range(spark, path, "n_nationkey", 0, 100),
+    ):
+        assert dict(df.dtypes)["extra"] == "bigint"
+        assert {(r["n_nationkey"], r["extra"]) for r in df.collect()} == {
+            (1, 7), (20, None),
+        }
+    old = read_keys(spark, path, keys, version=0)
+    assert old.columns == ["n_nationkey", "n_name", "n_regionkey"]
+    assert _rows(old) == {(1, "a", 0), (20, "b", 0)}
